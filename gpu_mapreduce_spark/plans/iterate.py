@@ -25,6 +25,7 @@ oink/cc_find.cpp:43-55 — Spark's partial aggregation + AQE subsume it).
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import NoReturn
 
 from pyspark.sql import Column, DataFrame, Observation
 
@@ -58,8 +59,11 @@ def fixpoint(
     converged: Callable[[DataFrame, DataFrame], bool],
     max_iter: int = 50,
 ) -> tuple[DataFrame, int]:
-    """Iterate `state = step(state)` until `converged(prev, cur)` or
-    max_iter. Returns (fixpoint DataFrame — checkpointed, iterations run).
+    """Iterate `state = step(state)` until `converged(prev, cur)`.
+    Returns (fixpoint DataFrame — checkpointed, iterations run). Raises
+    RuntimeError naming `max_iter` when the bound runs out first: the
+    partial state is not a fixpoint, and a returned round count of
+    `max_iter` could not tell it apart from convergence in the last round.
     Superseded per-round snapshots are unpersisted as soon as the convergence
     check has consumed them; only the returned fixpoint stays materialized.
 
@@ -77,7 +81,7 @@ def fixpoint(
         if done:
             return nxt, i
         cur = nxt
-    return cur, max_iter
+    _exhausted("fixpoint", max_iter, cur)
 
 
 def fixpoint_observed(
@@ -104,7 +108,8 @@ def fixpoint_observed(
     round's CollectMetrics node independent); `done(value)` decides
     convergence from the observed scalar. Rows are untouched:
     CollectMetrics is a transparent pass-through node, so results are
-    bit-identical to the probe form."""
+    bit-identical to the probe form — including the RuntimeError when
+    `max_iter` runs out unconverged."""
     cur = state.localCheckpoint(eager=True)
     for i in range(1, max_iter + 1):
         obs = Observation()
@@ -118,7 +123,16 @@ def fixpoint_observed(
         if done(val):
             return nxt, i
         cur = nxt
-    return cur, max_iter
+    _exhausted("fixpoint_observed", max_iter, cur)
+
+
+def _exhausted(name: str, max_iter: int, cur: DataFrame) -> NoReturn:
+    unpersist_checkpoint(cur)  # the partial state is never handed out
+    raise RuntimeError(
+        f"{name}: not converged within max_iter={max_iter} rounds — the"
+        " partial state is not a fixpoint, so it is never returned; raise"
+        " max_iter"
+    )
 
 
 def iterate_n(

@@ -20,7 +20,7 @@ delta-signature + an equi-join on (band, bh) whose candidate volume is
 proportional to the DELTA, never the corpus; verification joins only the
 banding-bounded candidate pairs back to the two shingle stores. At cluster
 scale the index would additionally be bucketed by bh within each band
-directory (the prepare_arcs_bucketed discipline) so the probe join needs
+directory (the sources/bucketed.py discipline) so the probe join needs
 no exchange on the index side.
 """
 

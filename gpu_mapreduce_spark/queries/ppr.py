@@ -21,9 +21,9 @@ by the oracle).
 Oracle: 10 unrolled CTE rounds of the same integer algebra over the
 fixtures edge CTE — pagerank's oracle with the CASE-gated teleport and
 seeded init. 100 TB: identical posture to pagerank (one arcs_deg ⋈
-state join + map-side-combinable SUM per round, broadcast-or-bucketed
-state via the shared `_state_side`); the personalization adds only a
-literal IN over the O(|S|) source list.
+state join + map-side-combinable SUM per round, the state side
+broadcast); the personalization adds only a literal IN over the O(|S|)
+source list.
 """
 
 from __future__ import annotations
